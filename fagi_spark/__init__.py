@@ -7,9 +7,9 @@ FAGI-gis (Java + Virtuoso/PostGIS conflation tool, read-only at
 - geocoding of Common-Crawl-style web pages (geo-entities extracted from
   ``text`` via vectorized Arrow UDFs) into hierarchical grid cells at
   multiple resolutions (``cells.py``),
-- FAGI-style link discovery as a cell-partitioned equi-join with
-  per-partition bbox-indexed point-in-polygon refinement (``joins.py``,
-  ``discover.py``),
+- FAGI-style link discovery as a cell-partitioned equi-join with an
+  exact ray-cast refine of the envelope-filtered candidates
+  (``joins.py``, ``discover.py``),
 - kNN conflation matching via cell-ring expansion + distance re-rank,
 - the full registry of FAGI fused-geometry actions (``fuse.py``) and
   metadata fusion actions (``metadata_fuse.py``),

@@ -39,11 +39,15 @@ import os as _os  # noqa: E402
 DEFAULT_PROVIDER = _os.environ.get("FAGI_CELL_PROVIDER", "grid")
 
 
+_H3_API = ("latlng_to_cell", "grid_disk", "str_to_int", "int_to_str")
+
+
 def _h3mod():
     """Import-guarded h3 handle (SURVEY §7.4 sanctions the grid
     stand-in; a container that ships ``h3`` gets true hexagons with
     zero call-site changes). Checked driver-side at column build so a
-    missing package fails fast, not inside a Spark task."""
+    missing package or a pre-4 h3 (whose names differ) fails fast, not
+    inside a Spark task."""
     try:
         import h3
     except ImportError as e:  # pragma: no cover - h3 absent in CI
@@ -51,6 +55,12 @@ def _h3mod():
             "cell provider 'h3' needs the optional h3 package "
             "(pip install h3); the bit-interleave grid provider is "
             "the built-in default") from e
+    missing = [n for n in _H3_API if not hasattr(h3, n)]
+    if missing:
+        raise ImportError(
+            f"cell provider 'h3' needs the h3 >= 4 API; the installed h3 "
+            f"{getattr(h3, '__version__', '(unknown version)')} lacks "
+            f"{', '.join(missing)}")
     return h3
 
 
@@ -68,15 +78,9 @@ def h3_cell_col(lon: Column, lat: Column, res: int) -> Column:
     @pandas_udf("long")
     def _k(lo: "_pd.Series", la: "_pd.Series") -> "_pd.Series":
         h3 = _h3mod()
-        to_int = getattr(h3, "str_to_int", None)
-        cell = getattr(h3, "latlng_to_cell", None) or h3.geo_to_h3
-        out = []
-        for o, a in zip(lo, la):
-            if o is None or a is None:
-                out.append(None)
-                continue
-            c = cell(float(a), float(o), res)
-            out.append(to_int(c) if isinstance(c, str) else int(c))
+        out = [None if o is None or a is None
+               else h3.str_to_int(h3.latlng_to_cell(float(a), float(o), res))
+               for o, a in zip(lo, la)]
         return _pd.Series(out, dtype="object")
 
     return _k(lon, lat)
@@ -95,18 +99,10 @@ def explode_disk_h3(df: DataFrame, k: int, cell: str = "cell",
     @pandas_udf("array<long>")
     def _disk(c: "_pd.Series") -> "_pd.Series":
         h3 = _h3mod()
-        to_int = getattr(h3, "str_to_int", None)
-        to_str = getattr(h3, "int_to_str", None)
-        disk = getattr(h3, "grid_disk", None) or h3.k_ring
-        out_ = []
-        for v in c:
-            if v is None:
-                out_.append(None)
-                continue
-            key = to_str(int(v)) if to_str is not None else int(v)
-            cells_ = disk(key, k)
-            out_.append([to_int(x) if isinstance(x, str) else int(x)
-                         for x in cells_])
+        out_ = [None if v is None
+                else [h3.str_to_int(x)
+                      for x in h3.grid_disk(h3.int_to_str(int(v)), k)]
+                for v in c]
         return _pd.Series(out_, dtype="object")
 
     return df.withColumn(out, F.explode(_disk(F.col(cell))))

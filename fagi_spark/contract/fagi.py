@@ -916,7 +916,7 @@ def q_intersects_join(spark, sf_dir):
     squares exact intersects == closed envelope overlap, which the
     oracle states directly. Concave/touching/contained general shapes
     (where envelope overlap != intersects) are pinned in pytest
-    (tests/test_joins_geo.py::test_intersects_join_*)."""
+    (tests/test_joins.py::test_intersects_join_*)."""
     _, ga, gb = _fagi_inputs(spark, sf_dir)
     pa = fuse.prepare_geoms(ga).filter(F.col("geom_kind") == "POLYGON")
     pb = fuse.prepare_geoms(gb).filter(F.col("geom_kind") == "POLYGON")

@@ -8,9 +8,12 @@ replace the index with grid-cell co-partitioning:
   ``bif:st_contains(geo, center, radius/111195)``,
   FindLinkServlet.java:190-199) -> cell-ring expansion at a radius-matched
   resolution -> equi-join on cell -> exact degree-distance re-rank;
-- point-in-polygon refinement (J6, GeoClusterer.java:326-334) -> per-cell
-  ``applyInPandas`` building a bbox-indexed polygon set (STRtree analog)
-  probed with vectorized ray casting;
+- point-in-polygon refinement (J6, GeoClusterer.java:326-334) -> polygons
+  explode their envelope's cell range, points carry one cell; a cell
+  equi-join plus an envelope filter in JVM codegen leaves the candidate
+  pairs, and one Arrow pass ray-casts only those candidates;
+- shape joins (intersects, dwithin, segment crossings and clips) -> one
+  PBSM candidate core (``_pbsm_candidates``) feeding an exact refine;
 - skew: dense city cells are salted (small side replicated across salts)
   and/or promoted to a finer resolution (cells.promote_hot_cells); AQE
   skew-join splitting backs both up.
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import cells, geom
@@ -54,6 +57,180 @@ def _widen(df: DataFrame) -> DataFrame:
 
 def _sided(df: DataFrame, side: str, cols) -> DataFrame:
     return df.select(*[F.col(c).alias(f"{side}_{c}") for c in cols])
+
+
+_ENV = ("xmin", "ymin", "xmax", "ymax")
+_GEO_COLS = ("subject", "geom_wkt") + _ENV
+
+
+def _overlaps(p, q) -> Column:
+    """Closed overlap of two envelopes given as (xmin, ymin, xmax, ymax)
+    column names; a point is the envelope (x, y, x, y)."""
+    return ((F.col(p[0]) <= F.col(q[2])) & (F.col(q[0]) <= F.col(p[2]))
+            & (F.col(p[1]) <= F.col(q[3])) & (F.col(q[1]) <= F.col(p[3])))
+
+
+def _degree_cells(res: int):
+    """(cell_x, cell_y) column maps of the lon/lat grid at ``res``."""
+    return (lambda c: cells.ix_col(c, res)), (lambda c: cells.iy_col(c, res))
+
+
+def _explode_envelope(df: DataFrame, env, cell_x, cell_y) -> DataFrame:
+    """One row per grid cell (pix, piy) the envelope ``env`` covers;
+    ``cell_x``/``cell_y`` map a coordinate column to its cell index."""
+    for out, lo, hi, cell in (("pix", env[0], env[2], cell_x),
+                              ("piy", env[1], env[3], cell_y)):
+        df = df.withColumn(out, F.explode(F.sequence(cell(F.col(lo)),
+                                                     cell(F.col(hi)))))
+    return df
+
+
+def _auto_res(env: DataFrame, pad: float = 0.0) -> int:
+    """Grid resolution of a PBSM join: ``pip_auto_res`` over both sides'
+    envelopes, coarsened until a cell is at least 2*pad wide and tall
+    so a padded envelope still replicates to a bounded ring."""
+    res = pip_auto_res(env)
+    while res > 0 and min(cells.cell_width_deg(res),
+                          cells.cell_height_deg(res)) < 2 * pad:
+        res -= 1
+    return res
+
+
+def _pbsm_candidates(a: DataFrame, b: DataFrame, res: int | None = None,
+                     pad: float | None = None,
+                     cell_w: int | None = None) -> DataFrame:
+    """PBSM (partition-based spatial-merge) candidate pairs of two sided
+    frames carrying ``{a,b}_{xmin,ymin,xmax,ymax}`` envelopes; every
+    column of both sides survives. The cells are the lon/lat grid at
+    ``res`` (None: ``_auto_res`` over both sides) or, with ``cell_w``,
+    an integer grid of ``cell_w`` units per cell.
+
+    1. A is widened (``_widen``) and, with ``pad``, its envelope grows
+       by ``pad`` on every side;
+    2. each side explodes its (padded) envelope's cell range and the
+       sides equi-join on the cell — never a cartesian;
+    3. prefilter in codegen: closed envelope overlap, or with ``pad``
+       the separating-gap test
+       GREATEST(0, gap_x)^2 + GREATEST(0, gap_y)^2 <= pad^2 (identical
+       IEEE ops to the oracles' rectangle distance);
+    4. REPORT-ONCE by the reference-point trick: a pair is kept only in
+       the cell holding the lower-left corner of the (padded) envelope
+       overlap, so no DISTINCT shuffle is needed (Patel & DeWitt 1996,
+       the duplicate-avoidance technique of PBSM)."""
+    if cell_w is not None:
+        cw = F.lit(float(cell_w))
+
+        def cell_x(c):
+            return F.floor(c.cast("double") / cw)
+        cell_y = cell_x
+    else:
+        if res is None:
+            env = (a.select(*[F.col(f"a_{c}").alias(c) for c in _ENV])
+                   .unionByName(b.select(*[F.col(f"b_{c}").alias(c)
+                                           for c in _ENV])))
+            res = _auto_res(env, pad or 0.0)
+        cell_x, cell_y = _degree_cells(res)
+    a_env, b_env = [f"a_{c}" for c in _ENV], [f"b_{c}" for c in _ENV]
+    a = _widen(a)
+    if pad is None:
+        near = _overlaps(a_env, b_env)
+    else:
+        r = F.lit(pad)
+        gap_x = F.greatest(F.lit(0.0), F.col("b_xmin") - F.col("a_xmax"),
+                           F.col("a_xmin") - F.col("b_xmax"))
+        gap_y = F.greatest(F.lit(0.0), F.col("b_ymin") - F.col("a_ymax"),
+                           F.col("a_ymin") - F.col("b_ymax"))
+        near = (gap_x * gap_x + gap_y * gap_y) <= (r * r)
+        a = (a.withColumn("pad_xmin", F.col("a_xmin") - r)
+             .withColumn("pad_ymin", F.col("a_ymin") - r)
+             .withColumn("pad_xmax", F.col("a_xmax") + r)
+             .withColumn("pad_ymax", F.col("a_ymax") + r))
+        a_env = [f"pad_{c}" for c in _ENV]
+    j = (_explode_envelope(a, a_env, cell_x, cell_y)
+         .join(_explode_envelope(b, b_env, cell_x, cell_y), ["pix", "piy"]))
+    # the overlap's lower-left corner lies in both sides' exploded
+    # ranges whenever the envelopes overlap, so exactly one joined cell
+    # claims the pair
+    ref_cell = ((F.col("pix") == cell_x(F.greatest(a_env[0], b_env[0])))
+                & (F.col("piy") == cell_y(F.greatest(a_env[1], b_env[1]))))
+    return j.filter(near & ref_cell)
+
+
+def _cached_wkt_parser():
+    """Per-task WKT parse cache for the refine kernels: returns a
+    ``g_of(wkt) -> Geometry | None`` closure. Failed parses are cached
+    as False internally so a malformed WKT is attempted once, and
+    callers uniformly see None for it."""
+    cache: dict[str, object] = {}
+
+    def g_of(wkt):
+        g = cache.get(wkt)
+        if g is None:
+            g = geom.parse_wkt(wkt)
+            cache[wkt] = g if g is not None else False
+        return None if g is False else g
+
+    return g_of
+
+
+def _refine_pairs(cand: DataFrame, pred, radius_deg: float | None = None
+                  ) -> DataFrame:
+    """Exact refine of PBSM candidate pairs in one mapInPandas pass over
+    (a_subject, a_geom_wkt, b_subject, b_geom_wkt). ``pred(ga, gb)`` is
+    a boolean predicate -> (a_subject, b_subject); with ``radius_deg``
+    it is a shape distance in degrees: pairs beyond the radius drop and
+    the kept ones carry distance_m."""
+    schema = "a_subject string, b_subject string"
+    if radius_deg is not None:
+        schema += ", distance_m double"
+
+    def refine(batches):
+        g_of = _cached_wkt_parser()
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            v = np.fromiter(
+                (pred(g_of(wa), g_of(wb))
+                 for wa, wb in zip(pdf["a_geom_wkt"], pdf["b_geom_wkt"])),
+                dtype=bool if radius_deg is None else np.float64,
+                count=len(pdf))
+            if radius_deg is None:
+                yield pdf.loc[v, ["a_subject", "b_subject"]]
+            else:
+                keep = v <= radius_deg
+                yield pdf.loc[keep, ["a_subject", "b_subject"]].assign(
+                    distance_m=v[keep] * geom.METERS_PER_DEGREE)
+
+    return (cand.select("a_subject", "a_geom_wkt", "b_subject", "b_geom_wkt")
+            .mapInPandas(refine, schema))
+
+
+def _refine_points_in_polygons(cand: DataFrame, schema: str) -> DataFrame:
+    """Exact point-in-polygon refine of candidate rows carrying (px, py,
+    geom_wkt) plus the ``schema`` output columns: per Arrow batch, rows
+    group by polygon WKT, each WKT parses once per task, non-polygons
+    drop, and one vectorized ray cast per polygon keeps the rows whose
+    point lies inside (half-open [x0, x1) edges, geom.points_in_polygon)."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def refine(batches):
+        g_of = _cached_wkt_parser()
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out: dict[str, list] = {c: [] for c in names}
+            for wkt, grp in pdf.groupby("geom_wkt", sort=False):
+                g = g_of(wkt)
+                if g is None or g.kind not in ("POLYGON", "MULTIPOLYGON"):
+                    continue
+                hit = geom.points_in_polygon(
+                    grp["px"].to_numpy(dtype=np.float64),
+                    grp["py"].to_numpy(dtype=np.float64), g)
+                for c in names:
+                    out[c].extend(grp[c].to_numpy()[hit].tolist())
+            yield pd.DataFrame(out)
+
+    return cand.mapInPandas(refine, schema)
 
 
 def radius_join(geo_a: DataFrame, geo_b: DataFrame, radius_m: float,
@@ -165,64 +342,19 @@ def rasterize_polygons(polygons: DataFrame, res: int,
     (ray-cast kernel on candidates only; boundary semantics identical
     to pip_refine's half-open [x0, x1) point test)."""
     w, h = cells.cell_width_deg(res), cells.cell_height_deg(res)
-    polys = (polygons
-             .select(F.col("subject"), "geom_wkt", "xmin", "ymin", "xmax", "ymax")
-             .withColumn("pix", F.explode(F.sequence(
-                 cells.ix_col(F.col("xmin"), res), cells.ix_col(F.col("xmax"), res))))
-             .withColumn("piy", F.explode(F.sequence(
-                 cells.iy_col(F.col("ymin"), res), cells.iy_col(F.col("ymax"), res))))
+    polys = (_explode_envelope(polygons.select("subject", "geom_wkt", *_ENV),
+                               _ENV, *_degree_cells(res))
              .withColumn("cell", cells.pack_cell(F.col("pix"), F.col("piy"), res)))
     if mode == "bbox":
         return polys.select("subject", "cell")
     # center sampling: center coords in JVM, bbox pre-filter, then one
     # Arrow pass ray-casting only surviving candidates
     cand = (polys
-            .withColumn("cx", F.lit(-180.0) + (F.col("pix") + F.lit(0.5)) * F.lit(w))
-            .withColumn("cy", F.lit(-90.0) + (F.col("piy") + F.lit(0.5)) * F.lit(h))
-            .filter((F.col("cx") >= F.col("xmin")) & (F.col("cx") <= F.col("xmax"))
-                    & (F.col("cy") >= F.col("ymin")) & (F.col("cy") <= F.col("ymax")))
-            .select("subject", "geom_wkt", "cx", "cy", "cell"))
-
-    def refine(batches):
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_s: list = []
-            out_c: list = []
-            for wkt, grp in pdf.groupby("geom_wkt", sort=False):
-                g = cache.get(wkt)
-                if g is None:
-                    g = geom.parse_wkt(wkt)
-                    cache[wkt] = g if g is not None else False
-                if g is False or g is None or g.kind not in ("POLYGON", "MULTIPOLYGON"):
-                    continue
-                px = grp["cx"].to_numpy(dtype=np.float64)
-                py = grp["cy"].to_numpy(dtype=np.float64)
-                hit = geom.points_in_polygon(px, py, g)
-                out_s.extend(grp["subject"].to_numpy()[hit].tolist())
-                out_c.extend(grp["cell"].to_numpy()[hit].tolist())
-            yield pd.DataFrame({"subject": out_s, "cell": out_c})
-
-    return cand.mapInPandas(refine, RASTER_SCHEMA)
-
-
-def _cached_wkt_parser():
-    """Per-batch WKT parse cache for Arrow refine kernels: returns a
-    ``g_of(wkt) -> Geometry | None`` closure. Failed parses are cached
-    as False internally so a malformed WKT is attempted once, and
-    callers uniformly see None for it — the sentinel subtlety lives in
-    ONE place instead of being copy-kept in every refiner."""
-    cache: dict[str, object] = {}
-
-    def g_of(wkt):
-        g = cache.get(wkt)
-        if g is None:
-            g = geom.parse_wkt(wkt)
-            cache[wkt] = g if g is not None else False
-        return None if g is False else g
-
-    return g_of
+            .withColumn("px", F.lit(-180.0) + (F.col("pix") + F.lit(0.5)) * F.lit(w))
+            .withColumn("py", F.lit(-90.0) + (F.col("piy") + F.lit(0.5)) * F.lit(h))
+            .filter(_overlaps(("px", "py", "px", "py"), _ENV))
+            .select("subject", "geom_wkt", "px", "py", "cell"))
+    return _refine_points_in_polygons(cand, RASTER_SCHEMA)
 
 
 def raster_iou(polys_a: DataFrame, polys_b: DataFrame, links: DataFrame,
@@ -283,72 +415,22 @@ def intersects_join(geo_a: DataFrame, geo_b: DataFrame,
     polygon<->polygon generalization of pip_refine (which fixes one
     side to points). The reference runs this class of predicate in
     PostGIS (GeoClusterer.java:326-354 ST_Intersects); here it is the
-    classic PBSM (partition-based spatial-merge) plan, all candidate
-    work JVM-side:
+    classic PBSM plan: ``_pbsm_candidates`` at ``res`` (auto-chosen from
+    BOTH sides' envelope size distribution so ~90% of geometries
+    replicate to <=2x2 cells) yields each closed-envelope-overlap pair
+    exactly once, all in JVM codegen, then exact
+    ``geom.geoms_intersect`` refinement (vertex containment, proper
+    crossings, boundary touches) runs on those candidates only.
 
-    1. ``res`` auto-chosen from BOTH sides' envelope size distribution
-       (pip_auto_res) so ~90% of geometries replicate to <=2x2 cells;
-    2. each side explodes its envelope's cell range at ``res`` and the
-       sides equi-join on the cell — never a cartesian;
-    3. closed envelope-overlap prefilter (codegen'd comparisons);
-    4. REPORT-ONCE dedup by the reference-point trick: a surviving
-       pair is kept only in the one cell containing the intersection
-       envelope's lower-left corner, so no DISTINCT shuffle is needed
-       and downstream sees each pair exactly once (Patel & DeWitt
-       1996, the duplicate-avoidance technique of PBSM);
-    5. exact ``geom.geoms_intersect`` refinement (vertex containment,
-       proper crossings, boundary touches) on surviving candidates
-       only — Arrow batches with a per-batch WKT parse cache.
-
-    ``exact=False`` stops after step 4: the envelope-overlap candidate
+    ``exact=False`` skips the refinement: the envelope-overlap candidate
     pairs (a coverage superset — right for tile layout and pruning).
     Works for any geometry kinds (a POINT's envelope is one cell);
     filter kinds upstream when only polygons are wanted."""
-    cols = ["subject", "geom_wkt", "xmin", "ymin", "xmax", "ymax"]
-    if res is None:
-        env = (geo_a.select("xmin", "ymin", "xmax", "ymax")
-               .unionByName(geo_b.select("xmin", "ymin", "xmax", "ymax")))
-        res = pip_auto_res(env)
-    a = _widen(_sided(geo_a, "a", cols))
-    b = _sided(geo_b, "b", cols)
-
-    def with_cells(df, p):
-        return (df.withColumn("pix", F.explode(F.sequence(
-                    cells.ix_col(F.col(f"{p}_xmin"), res),
-                    cells.ix_col(F.col(f"{p}_xmax"), res))))
-                .withColumn("piy", F.explode(F.sequence(
-                    cells.iy_col(F.col(f"{p}_ymin"), res),
-                    cells.iy_col(F.col(f"{p}_ymax"), res)))))
-
-    j = with_cells(a, "a").join(with_cells(b, "b"), ["pix", "piy"])
-    overlap = ((F.col("a_xmin") <= F.col("b_xmax"))
-               & (F.col("b_xmin") <= F.col("a_xmax"))
-               & (F.col("a_ymin") <= F.col("b_ymax"))
-               & (F.col("b_ymin") <= F.col("a_ymax")))
-    # the intersection envelope's lower-left corner lies in both sides'
-    # exploded ranges whenever the envelopes overlap, so exactly one
-    # joined cell claims the pair
-    ref_cell = ((F.col("pix") == cells.ix_col(
-                    F.greatest("a_xmin", "b_xmin"), res))
-                & (F.col("piy") == cells.iy_col(
-                    F.greatest("a_ymin", "b_ymin"), res)))
-    cand = j.filter(overlap & ref_cell)
+    cand = _pbsm_candidates(_sided(geo_a, "a", _GEO_COLS),
+                            _sided(geo_b, "b", _GEO_COLS), res)
     if not exact:
         return cand.select("a_subject", "b_subject")
-    cand = cand.select("a_subject", "a_geom_wkt", "b_subject", "b_geom_wkt")
-
-    def refine(batches):
-        g_of = _cached_wkt_parser()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.fromiter(
-                (geom.geoms_intersect(g_of(wa), g_of(wb))
-                 for wa, wb in zip(pdf["a_geom_wkt"], pdf["b_geom_wkt"])),
-                dtype=bool, count=len(pdf))
-            yield pdf.loc[keep, ["a_subject", "b_subject"]]
-
-    return cand.mapInPandas(refine, "a_subject string, b_subject string")
+    return _refine_pairs(cand, geom.geoms_intersect)
 
 
 def dwithin_join(geo_a: DataFrame, geo_b: DataFrame, radius_m: float,
@@ -359,81 +441,20 @@ def dwithin_join(geo_a: DataFrame, geo_b: DataFrame, radius_m: float,
     is the centroid approximation; this is the exact predicate the
     reference delegates to PostGIS ST_DWithin). Same PBSM shape as
     intersects_join with the A-side envelope padded by the radius:
-
-    1. A explodes the cell range of its envelope GROWN by radius_deg,
-       B explodes its raw envelope; equi-join on cell;
-    2. codegen'd envelope-distance prefilter:
-       GREATEST(0, gap_x)^2 + GREATEST(0, gap_y)^2 <= radius_deg^2
-       (the separating-gap lower bound — identical IEEE ops to the
-       oracle's rectangle distance);
-    3. report-once on the padded-A/B envelope overlap's lower-left
-       corner cell — no DISTINCT shuffle;
-    4. exact geom.min_distance refinement on survivors only
-       (``exact=False`` stops after 3 and returns the candidates).
+    ``_pbsm_candidates`` keeps each pair whose envelopes lie within
+    the radius once (separating-gap prefilter, report-once on the
+    padded-A/B overlap corner), then exact ``geom.min_distance``
+    refinement runs on those candidates only (``exact=False`` returns
+    the candidates).
 
     Output (a_subject, b_subject, distance_m); distance is the exact
     shape-to-shape minimum (0.0 for intersecting shapes)."""
     radius_deg = radius_m / geom.METERS_PER_DEGREE
-    cols = ["subject", "geom_wkt", "xmin", "ymin", "xmax", "ymax"]
-    if res is None:
-        env = (geo_a.select("xmin", "ymin", "xmax", "ymax")
-               .unionByName(geo_b.select("xmin", "ymin", "xmax", "ymax")))
-        res = pip_auto_res(env)
-        # the padded envelope must still replicate to a bounded ring
-        while res > 0 and (cells.cell_width_deg(res) < 2 * radius_deg
-                           or cells.cell_height_deg(res) < 2 * radius_deg):
-            res -= 1
-    a = _sided(geo_a, "a", cols)
-    b = _sided(geo_b, "b", cols)
-    a = _widen(a)
-    r = F.lit(radius_deg)
-    a = (a.withColumn("pad_xmin", F.col("a_xmin") - r)
-         .withColumn("pad_ymin", F.col("a_ymin") - r)
-         .withColumn("pad_xmax", F.col("a_xmax") + r)
-         .withColumn("pad_ymax", F.col("a_ymax") + r))
-    aa = (a.withColumn("pix", F.explode(F.sequence(
-              cells.ix_col(F.col("pad_xmin"), res),
-              cells.ix_col(F.col("pad_xmax"), res))))
-          .withColumn("piy", F.explode(F.sequence(
-              cells.iy_col(F.col("pad_ymin"), res),
-              cells.iy_col(F.col("pad_ymax"), res)))))
-    bb = (b.withColumn("pix", F.explode(F.sequence(
-              cells.ix_col(F.col("b_xmin"), res),
-              cells.ix_col(F.col("b_xmax"), res))))
-          .withColumn("piy", F.explode(F.sequence(
-              cells.iy_col(F.col("b_ymin"), res),
-              cells.iy_col(F.col("b_ymax"), res)))))
-    j = aa.join(bb, ["pix", "piy"])
-    gap_x = F.greatest(F.lit(0.0), F.col("b_xmin") - F.col("a_xmax"),
-                       F.col("a_xmin") - F.col("b_xmax"))
-    gap_y = F.greatest(F.lit(0.0), F.col("b_ymin") - F.col("a_ymax"),
-                       F.col("a_ymin") - F.col("b_ymax"))
-    env_near = (gap_x * gap_x + gap_y * gap_y) <= (r * r)
-    ref_cell = ((F.col("pix") == cells.ix_col(
-                    F.greatest("pad_xmin", "b_xmin"), res))
-                & (F.col("piy") == cells.iy_col(
-                    F.greatest("pad_ymin", "b_ymin"), res)))
-    cand = j.filter(env_near & ref_cell)
+    cand = _pbsm_candidates(_sided(geo_a, "a", _GEO_COLS),
+                            _sided(geo_b, "b", _GEO_COLS), res, pad=radius_deg)
     if not exact:
         return cand.select("a_subject", "b_subject")
-    cand = cand.select("a_subject", "a_geom_wkt", "b_subject", "b_geom_wkt")
-
-    def refine(batches):
-        g_of = _cached_wkt_parser()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            dists = np.fromiter(
-                (geom.min_distance(g_of(wa), g_of(wb))
-                 for wa, wb in zip(pdf["a_geom_wkt"], pdf["b_geom_wkt"])),
-                dtype=np.float64, count=len(pdf))
-            keep = dists <= radius_deg
-            out = pdf.loc[keep, ["a_subject", "b_subject"]].copy()
-            out["distance_m"] = dists[keep] * geom.METERS_PER_DEGREE
-            yield out
-
-    return cand.mapInPandas(
-        refine, "a_subject string, b_subject string, distance_m double")
+    return _refine_pairs(cand, geom.min_distance, radius_deg)
 
 
 def knn_shape_join(geo_a: DataFrame, geo_b: DataFrame, k_neighbors: int,
@@ -534,48 +555,17 @@ def pip_refine(points: DataFrame, polygons: DataFrame,
     # extra shuffle never amortizes the way the dwithin/segment
     # refiners' heavy Arrow stages do
     pts = cells.with_cell(pts, res, lon="px", lat="py")
-
-    polys = polygons.select(F.col("subject").alias("pg_subject"), "geom_wkt",
-                            "xmin", "ymin", "xmax", "ymax")
-    polys = (polys
-             .withColumn("ix0", cells.ix_col(F.col("xmin"), res))
-             .withColumn("ix1", cells.ix_col(F.col("xmax"), res))
-             .withColumn("iy0", cells.iy_col(F.col("ymin"), res))
-             .withColumn("iy1", cells.iy_col(F.col("ymax"), res))
-             .withColumn("pix", F.explode(F.sequence(F.col("ix0"), F.col("ix1"))))
-             .withColumn("piy", F.explode(F.sequence(F.col("iy0"), F.col("iy1"))))
+    polys = (_explode_envelope(
+                 polygons.select(F.col("subject").alias("pg_subject"),
+                                 "geom_wkt", *_ENV), _ENV, *_degree_cells(res))
              .withColumn("cell", cells.pack_cell(F.col("pix"), F.col("piy"), res))
-             .select("pg_subject", "geom_wkt", "xmin", "ymin", "xmax", "ymax", "cell"))
-
+             .select("pg_subject", "geom_wkt", *_ENV, "cell"))
     cand = (pts.select("pt_subject", "px", "py", "cell")
             .join(polys, "cell")
-            .filter((F.col("px") >= F.col("xmin")) & (F.col("px") <= F.col("xmax"))
-                    & (F.col("py") >= F.col("ymin")) & (F.col("py") <= F.col("ymax")))
-            .select("pt_subject", "px", "py", "pg_subject", "geom_wkt"))
-
-    def refine(batches):
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_pt: list = []
-            out_pg: list = []
-            # vectorize per distinct polygon within the batch
-            for wkt, grp in pdf.groupby("geom_wkt", sort=False):
-                g = cache.get(wkt)
-                if g is None:
-                    g = geom.parse_wkt(wkt)
-                    cache[wkt] = g if g is not None else False
-                if g is False or g is None or g.kind not in ("POLYGON", "MULTIPOLYGON"):
-                    continue
-                px = grp["px"].to_numpy(dtype=np.float64)
-                py = grp["py"].to_numpy(dtype=np.float64)
-                hit = geom.points_in_polygon(px, py, g)
-                out_pt.extend(grp["pt_subject"].to_numpy()[hit].tolist())
-                out_pg.extend(grp["pg_subject"].to_numpy()[hit].tolist())
-            yield pd.DataFrame({"point_subject": out_pt, "poly_subject": out_pg})
-
-    return cand.mapInPandas(refine, PIP_SCHEMA)
+            .filter(_overlaps(("px", "py", "px", "py"), _ENV))
+            .select(F.col("pt_subject").alias("point_subject"), "px", "py",
+                    F.col("pg_subject").alias("poly_subject"), "geom_wkt"))
+    return _refine_points_in_polygons(cand, PIP_SCHEMA)
 
 
 def zonal_stats(points: DataFrame, polygons: DataFrame,
@@ -808,6 +798,23 @@ def huff_probabilities(demand: DataFrame, sites: DataFrame,
                     (F.col("_w") / F.col("_den")).alias("p")))
 
 
+def _segments(segs: DataFrame, p: str) -> DataFrame:
+    """Integer segments as ``p``-prefixed (subject, x1, y1, x2, y2) longs
+    plus their envelope (xmin, ymin, xmax, ymax); zero-length segments
+    drop."""
+    df = (segs.select(F.col("subject").alias(f"{p}_subject"),
+                      *[F.col(c).cast("long").alias(f"{p}_{c}")
+                        for c in ("x1", "y1", "x2", "y2")])
+          .filter((F.col(f"{p}_x1") != F.col(f"{p}_x2"))
+                  | (F.col(f"{p}_y1") != F.col(f"{p}_y2"))))
+    for c, pick, u, v in (("xmin", F.least, "x1", "x2"),
+                          ("ymin", F.least, "y1", "y2"),
+                          ("xmax", F.greatest, "x1", "x2"),
+                          ("ymax", F.greatest, "y1", "y2")):
+        df = df.withColumn(f"{p}_{c}", pick(f"{p}_{u}", f"{p}_{v}"))
+    return df
+
+
 def segment_intersections(segs_a: DataFrame, segs_b: DataFrame,
                           cell_w: int = 32) -> DataFrame:
     """Exact line-segment intersection join — road-network crossing
@@ -822,63 +829,28 @@ def segment_intersections(segs_a: DataFrame, segs_b: DataFrame,
     filtered out (stated). Plan shape is PBSM like intersects_join,
     but the refinement is pure whole-stage codegen (no Python stage):
 
-    1. each side explodes its bbox's cell range at ``cell_w`` units
-       per cell and the sides equi-join on the cell — never a
-       cartesian;
-    2. report-once dedup by the reference-point trick (the cell
-       holding the bbox-overlap lower-left corner claims the pair);
-    3. exact BIGINT orientation tests: non-collinear segments
+    1. ``_pbsm_candidates`` on a grid of ``cell_w`` units per cell:
+       bbox cell-range explode, cell equi-join (never a cartesian),
+       bbox-overlap prefilter, report-once by the overlap's lower-left
+       corner cell;
+    2. exact BIGINT orientation tests: non-collinear segments
        intersect iff d1*d2 <= 0 AND d3*d4 <= 0 (the zero-orientation
        edge cases are subsumed — a line meeting the other's carrier
        outside the segment forces the opposite product positive);
        collinear pairs (d1 = d2 = 0) intersect iff their projections
        onto the dominant axis overlap;
-    4. classification: 'proper' (strict crossing), 'touch' (endpoint
+    3. classification: 'proper' (strict crossing), 'touch' (endpoint
        contact or collinear single-point), 'overlap' (collinear with
        positive shared length);
-    5. for proper crossings the intersection point is emitted as
+    4. for proper crossings the intersection point is emitted as
        exact rationals (ix_num/iden, iy_num/iden), den normalized
        positive — BIGINT-exact, so the oracle compares integers.
 
     Returns (a_subject, b_subject, itype, ix_num, iy_num, iden) with
     NULL rationals for non-proper contacts.
     """
-    def norm(df, p):
-        keep = [F.col("subject").alias(f"{p}_subject")]
-        for c in ("x1", "y1", "x2", "y2"):
-            keep.append(F.col(c).cast("long").alias(f"{p}_{c}"))
-        out = df.select(*keep)
-        return out.filter((F.col(f"{p}_x1") != F.col(f"{p}_x2"))
-                          | (F.col(f"{p}_y1") != F.col(f"{p}_y2")))
-
-    a, b = _widen(norm(segs_a, "a")), norm(segs_b, "b")
-
-    def with_cells(df, p):
-        xmin = F.least(f"{p}_x1", f"{p}_x2")
-        xmax = F.greatest(f"{p}_x1", f"{p}_x2")
-        ymin = F.least(f"{p}_y1", f"{p}_y2")
-        ymax = F.greatest(f"{p}_y1", f"{p}_y2")
-        cw = F.lit(float(cell_w))
-        df = (df.withColumn(f"{p}_xmin", xmin).withColumn(f"{p}_xmax", xmax)
-                .withColumn(f"{p}_ymin", ymin).withColumn(f"{p}_ymax", ymax))
-        return (df.withColumn("cx", F.explode(F.sequence(
-                    F.floor(F.col(f"{p}_xmin").cast("double") / cw),
-                    F.floor(F.col(f"{p}_xmax").cast("double") / cw))))
-                  .withColumn("cy", F.explode(F.sequence(
-                    F.floor(F.col(f"{p}_ymin").cast("double") / cw),
-                    F.floor(F.col(f"{p}_ymax").cast("double") / cw)))))
-
-    j = with_cells(a, "a").join(with_cells(b, "b"), ["cx", "cy"])
-    cw = F.lit(float(cell_w))
-    overlap = ((F.col("a_xmin") <= F.col("b_xmax"))
-               & (F.col("b_xmin") <= F.col("a_xmax"))
-               & (F.col("a_ymin") <= F.col("b_ymax"))
-               & (F.col("b_ymin") <= F.col("a_ymax")))
-    ref_cell = ((F.col("cx") == F.floor(
-                    F.greatest("a_xmin", "b_xmin").cast("double") / cw))
-                & (F.col("cy") == F.floor(
-                    F.greatest("a_ymin", "b_ymin").cast("double") / cw)))
-    cand = j.filter(overlap & ref_cell)
+    cand = _pbsm_candidates(_segments(segs_a, "a"), _segments(segs_b, "b"),
+                            cell_w=cell_w)
 
     rx, ry = F.col("a_x2") - F.col("a_x1"), F.col("a_y2") - F.col("a_y1")
     sx, sy = F.col("b_x2") - F.col("b_x1"), F.col("b_y2") - F.col("b_y1")
@@ -968,43 +940,14 @@ def segment_clip_boxes(segs: DataFrame, boxes: DataFrame,
     same filter in any oracle), or treat ``frac`` (float) as the only
     trustworthy length field beyond that span.
     """
-    a = (segs.select(F.col("subject").alias("a_subject"),
-                     *[F.col(c).cast("long").alias(f"a_{c}")
-                       for c in ("x1", "y1", "x2", "y2")])
-         .filter((F.col("a_x1") != F.col("a_x2"))
-                 | (F.col("a_y1") != F.col("a_y2"))))
+    a = _segments(segs, "a")
     if max_span is not None:
         a = a.filter(
             (F.abs(F.col("a_x2") - F.col("a_x1")) <= max_span)
             & (F.abs(F.col("a_y2") - F.col("a_y1")) <= max_span))
     b = boxes.select(F.col("subject").alias("b_subject"),
-                     *[F.col(c).cast("long").alias(f"b_{c}")
-                       for c in ("xmin", "ymin", "xmax", "ymax")])
-    cw = F.lit(float(cell_w))
-    a = _widen(a)
-    a = (a.withColumn("a_xmin", F.least("a_x1", "a_x2"))
-          .withColumn("a_xmax", F.greatest("a_x1", "a_x2"))
-          .withColumn("a_ymin", F.least("a_y1", "a_y2"))
-          .withColumn("a_ymax", F.greatest("a_y1", "a_y2")))
-
-    def with_cells(df, p):
-        return (df.withColumn("cx", F.explode(F.sequence(
-                    F.floor(F.col(f"{p}_xmin").cast("double") / cw),
-                    F.floor(F.col(f"{p}_xmax").cast("double") / cw))))
-                  .withColumn("cy", F.explode(F.sequence(
-                    F.floor(F.col(f"{p}_ymin").cast("double") / cw),
-                    F.floor(F.col(f"{p}_ymax").cast("double") / cw)))))
-
-    j = with_cells(a, "a").join(with_cells(b, "b"), ["cx", "cy"])
-    overlap = ((F.col("a_xmin") <= F.col("b_xmax"))
-               & (F.col("b_xmin") <= F.col("a_xmax"))
-               & (F.col("a_ymin") <= F.col("b_ymax"))
-               & (F.col("b_ymin") <= F.col("a_ymax")))
-    ref_cell = ((F.col("cx") == F.floor(
-                    F.greatest("a_xmin", "b_xmin").cast("double") / cw))
-                & (F.col("cy") == F.floor(
-                    F.greatest("a_ymin", "b_ymin").cast("double") / cw)))
-    cand = j.filter(overlap & ref_cell)
+                     *[F.col(c).cast("long").alias(f"b_{c}") for c in _ENV])
+    cand = _pbsm_candidates(a, b, cell_w=cell_w)
 
     dx = F.col("a_x2") - F.col("a_x1")
     dy = F.col("a_y2") - F.col("a_y1")

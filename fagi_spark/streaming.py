@@ -806,6 +806,15 @@ def activity_periods_stream(events: DataFrame, res: int, period_s: int,
                     "cell", "n_events"))
 
 
+def _require_local_state(state_path: str) -> None:
+    """The CDC state layout is listed with ``os`` calls, so a URI
+    (s3a://, hdfs://, file://) would silently read as an empty state
+    and rebuild every batch from nothing: refuse it on the driver."""
+    if "://" in state_path:
+        raise ValueError(
+            f"CDC state_path must be a local directory, got {state_path!r}")
+
+
 def _cdc_state_ids(state_path: str) -> list[int]:
     """Sorted batch ids present under ``state_path`` (local-fs
     directory listing — the test-scale stand-in for Iceberg snapshot
@@ -833,6 +842,7 @@ def read_cdc_state(spark: SparkSession, state_path: str,
     ``compact_every - 1`` deltas long by construction."""
     import os
 
+    _require_local_state(state_path)
     empty = spark.createDataFrame([], "subject string, geom_wkt string")
     ids = _cdc_state_ids(state_path)
     if before is not None:
@@ -890,6 +900,7 @@ def cdc_diff_stream(updates: DataFrame, state_path: str, diff_path: str,
 
     if compact_every < 1:
         raise ValueError("compact_every must be >= 1")
+    _require_local_state(state_path)
     spark = updates.sparkSession
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -822,11 +822,15 @@ def test_contour_segments_single_peak_and_parity(spark):
     assert (0, 0, 5, 0) in got and (0, 0, 5, 1) in got  # the saddle block
 
 
-def test_cell_provider_seam(spark):
+def test_cell_provider_seam(spark, monkeypatch):
     """r4 verdict item 5: the import-guarded h3 provider behind
     cells.cell_col. The grid provider is byte-identical to the historic
     default; provider='h3' either runs the real h3 path (where the package
-    is importable) or fails fast driver-side with install guidance."""
+    is importable) or fails fast driver-side with install guidance, and
+    an h3 with the pre-4 API fails fast naming the version."""
+    import sys
+    import types
+
     import pytest
 
     pts = [(-71.0571, 42.3601), (12.5, 41.9), (139.69, 35.68)]
@@ -867,3 +871,16 @@ def test_cell_provider_seam(spark):
                                      provider="h3").alias("cell")), 1)
         per = disks.groupBy("cell").count().collect()
         assert all(r["count"] in (6, 7) for r in per)  # hex + pentagons
+
+    # an h3 3.x module (geo_to_h3 / k_ring names) must not reach a task
+    v3 = types.ModuleType("h3")
+    v3.__version__ = "3.7.7"
+    v3.geo_to_h3 = lambda lat, lng, res: "89283082837ffff"
+    v3.k_ring = lambda h, k: [h]
+    v3.string_to_h3 = int
+    monkeypatch.setitem(sys.modules, "h3", v3)
+    with pytest.raises(ImportError, match=r"h3 >= 4 API.*3\.7\.7.*"
+                                          "latlng_to_cell"):
+        cells.cell_col(F.col("lon"), F.col("lat"), 9, provider="h3")
+    with pytest.raises(ImportError, match="h3 >= 4 API"):
+        cells.explode_disk_h3(df.withColumn("cell", F.lit(0).cast("long")), 1)

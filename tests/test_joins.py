@@ -215,6 +215,16 @@ def test_dwithin_join_matches_bruteforce(spark):
             for (sa, a), (sb, b) in itertools.product(A, B)
             if geom.min_distance(a, b) <= rd}
     assert got == want and len(got) > 0
+    # candidates are reported once, and cover every exact pair, both at
+    # the auto resolution and two levels finer, where the padded A
+    # envelopes span several cells per axis
+    env = ["xmin", "ymin", "xmax", "ymax"]
+    auto = joins._auto_res(pa.select(*env).unionByName(pb.select(*env)), rd)
+    for res in (None, auto + 2):
+        cand = joins.dwithin_join(pa, pb, R, res=res, exact=False)
+        pairs = [(r.a_subject, r.b_subject) for r in cand.collect()]
+        assert len(pairs) == len(set(pairs)) == cand.distinct().count()
+        assert set(got) <= set(pairs)
 
 
 def test_dwithin_join_shapes_not_centroids(spark):

@@ -174,10 +174,14 @@ def main():
     # formatted plans print each node twice (tree + detail), so count
     # the detail-section headers only
     import re as _re
-    n_mip = len(_re.findall(r"^\(\d+\) MapInPandas", ij_text, _re.M))
-    if n_mip != 1:
-        raise SystemExit("intersects_join: expected exactly one "
-                         f"MapInPandas exact-refine stage, got {n_mip}")
+
+    def one_refine(name, text):
+        n_mip = len(_re.findall(r"^\(\d+\) MapInPandas", text, _re.M))
+        if n_mip != 1:
+            raise SystemExit(f"{name}: expected exactly one MapInPandas "
+                             f"exact-refine stage, got {n_mip}")
+
+    one_refine("intersects_join", ij_text)
     add("intersects_join (J6b, PBSM)", ij_plan,
         ["codegen"],
         "both polygon sides explode their envelope cell ranges and "
@@ -195,13 +199,15 @@ def main():
     if "CartesianProduct" in dw_text or "BroadcastNestedLoop" in dw_text:
         raise SystemExit("dwithin_join: candidate stage degenerated "
                          "to a cartesian/nested-loop join")
+    one_refine("dwithin_join", dw_text)
     add("dwithin_join (J6c, PBSM + padded envelopes)", dw_plan,
         ["codegen"],
         "the A side pads its envelope by the radius before exploding "
         "cell ranges; the separating-gap prefilter (GREATEST(0,gap)^2 "
         "sum vs radius^2) and report-once predicate are codegen'd; "
-        "only true near-pairs reach the exact min-distance Arrow "
-        "kernel. No cartesian (enforced structurally).")
+        "only true near-pairs reach the single MapInPandas exact "
+        "min-distance refine stage. No cartesian, one refine stage "
+        "(both enforced structurally).")
 
     # 4. precedence dedup: WindowGroupLimit partial before the shuffle
     pages = synth.synth_pages(spark, 2000)
