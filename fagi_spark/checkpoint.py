@@ -332,8 +332,17 @@ class CheckpointStore:
             with open(path) as f:
                 payload = json.load(f)
             payload["metrics"] = {k: _jsonable(row[k]) for k in observe}
-            with open(path, "w") as f:
-                json.dump(payload, f)
+            # the snapshot is already published: rewrite its lineage
+            # via write-temp + rename (as _publish does), so a crash
+            # mid-dump leaves the old file intact, never truncated JSON
+            tmp = f"{path}.tmp.{os.getpid()}"
+            try:
+                with open(tmp, "w") as f:
+                    json.dump(payload, f)
+                os.replace(tmp, path)
+            finally:
+                if os.path.exists(tmp):
+                    os.unlink(tmp)
         return out
 
 

@@ -2,7 +2,7 @@
 
 Re-expresses the reference's geometry discovery (Importer.java:208-216)
 over Common-Crawl-style pages: instead of SPARQL scans of RDF graphs, a
-single Arrow-vectorized ``mapInPandas`` pass extracts both
+single Arrow-vectorized ``mapInArrow`` pass extracts both
 serializations from ``text``:
 
   1. W3C WGS84 lat/long pairs — ``lat <decimal> long <decimal>``
@@ -14,7 +14,8 @@ serializations from ``text``:
 One geometry per subject is enforced by the reference's type-precedence
 table (Constants.java:85-95: MULTIPOLYGON > POLYGON > MULTILINESTRING >
 LINESTRING > MULTIPOINT > POINT; dedup loops Importer.java:306-314,
-367-378) — here a window ``row_number()`` (SURVEY.md §2.1 S5).
+367-378) — here a window ``row_number()``, or per page inside the
+kernel (``geocode_pages`` ``dedup_mode``; SURVEY.md §2.1 S5).
 
 Invariant: ``text`` is never modified — the byte-identical-text-per-url
 check hashes it at ingest and at output (BASELINE.json input_hint).
@@ -23,9 +24,7 @@ check hashes it at ingest and at output (BASELINE.json input_hint).
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,11 +35,16 @@ LATLONG_RE = re.compile(
     r"\blat\w*[\s:=]+(-?\d{1,2}(?:\.\d+)?)[\s,;]+long\w*[\s:=]+(-?\d{1,3}(?:\.\d+)?)",
     re.IGNORECASE)
 
-# balanced-paren WKT snippet, nesting depth <= 3 (MULTIPOLYGON)
-_NP = r"[^()]*"
-_D1 = rf"\({_NP}\)"
-_D2 = rf"\((?:{_NP}|{_D1})*\)"
-_D3 = rf"\((?:{_NP}|{_D2})*\)"
+# balanced-paren WKT snippet, nesting depth <= 3 (MULTIPOLYGON).
+# Every quantifier in the paren body is possessive: a balanced body has
+# exactly one parse, so giving characters back can never produce a
+# match, and unclosed input fails in linear time. Backtracking greedy
+# quantifiers nested as ``(?:[^()]*|...)*`` are exponential there
+# (0.5 s for "POINT (" + "a"*22, x4 per two more characters), so one
+# malformed page could hang a task.
+_D1 = r"\([^()]*+\)"
+_D2 = rf"\((?:[^()]++|{_D1})*+\)"
+_D3 = rf"\((?:[^()]++|{_D2})*+\)"
 WKT_RE = re.compile(
     rf"\b(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON)\s*({_D3})")
 
@@ -111,100 +115,51 @@ def _wkt_matches(text: str):
     return out
 
 
-def _extract_batch(pdf: pd.DataFrame, carry: tuple[str, ...] = (),
-                   dedup_local: bool = False) -> pd.DataFrame:
-    rows = []
-    carry_vals = [pdf[c] for c in carry]
-    for url, text, *extra in zip(pdf["url"], pdf["text"], *carry_vals):
-        if text is None:
+def _page_entities(url: str, text: str):
+    """One page's entity rows (``ENTITY_SCHEMA`` order) in
+    extraction order: in-bounds WGS84 lat/long pairs first, then
+    parseable in-bounds WKT snippets (Importer.java's scan order).
+    ``entity_idx`` counts kept rows only. The candidate scans are
+    C-level ``str.find`` + anchored regex, so a page without any
+    keyword costs a few failed finds and no regex scan at all."""
+    idx = 0
+    for m in _latlong_matches(text):
+        la, lo = float(m.group(1)), float(m.group(2))
+        if not (-90.0 <= la <= 90.0 and -180.0 <= lo <= 180.0):
             continue
-        page_rows = []
-        idx = 0
-        for m in _latlong_matches(text):
-            lat, lon = float(m.group(1)), float(m.group(2))
-            if not (-90.0 <= lat <= 90.0 and -180.0 <= lon <= 180.0):
-                continue
-            wkt = f"POINT ({geom._fmt(lon)} {geom._fmt(lat)})"
-            page_rows.append((url, idx, "wgs84", wkt, "POINT", geom.KIND_RANK["POINT"], 1,
-                              lon, lat, lon, lat, lon, lat, *extra))
-            idx += 1
-        # _wkt_matches subsumes the old page-level keyword prescan:
-        # candidate positions come from C-level str.find, so a no-WKT
-        # page costs three failed finds and no regex scan at all
-        for m in _wkt_matches(text):
-            s = geom.stats(m.group(0))
-            if s is None:
-                continue
-            kind, rank, np_, cx, cy, x0, y0, x1, y1 = s
-            if not (-180.0 <= cx <= 180.0 and -90.0 <= cy <= 90.0):
-                continue
-            page_rows.append((url, idx, "wkt", m.group(0), kind, rank, np_,
-                              cx, cy, x0, y0, x1, y1, *extra))
-            idx += 1
-        if dedup_local and page_rows:
-            # precedence dedup INSIDE the kernel: all of a url's
-            # entities are emitted from this one page row, so the
-            # per-url winner (min kind_rank, then extraction order) is
-            # decidable here — no window, NO SHUFFLE (the window
-            # variant's exchange was the pipeline's only large
-            # cross-executor transfer; see geocode_pages)
-            rows.append(min(page_rows, key=lambda r: (r[5], r[1])))
-        else:
-            rows.extend(page_rows)
-    return pd.DataFrame(rows, columns=[
-        "url", "entity_idx", "source", "geom_wkt", "geom_kind", "kind_rank",
-        "npoints", "lon", "lat", "xmin", "ymin", "xmax", "ymax", *carry])
-
-
-def _extract_wkt_batch(pdf: pd.DataFrame, carry: tuple[str, ...] = ()) -> pd.DataFrame:
-    """WKT-only extraction for the hybrid engine: the page's WGS84
-    matches were already counted JVM-side, so entity_idx starts at the
-    supplied ``_idx0`` offset (global per-page ordering preserved:
-    lat/long entities first, WKT entities after — Importer.java's scan
-    order)."""
-    rows = []
-    carry_vals = [pdf[c] for c in carry]
-    for url, text, idx0, *extra in zip(pdf["url"], pdf["text"], pdf["_idx0"],
-                                       *carry_vals):
-        if text is None:
+        yield (url, idx, "wgs84", f"POINT ({geom._fmt(lo)} {geom._fmt(la)})",
+               "POINT", geom.KIND_RANK["POINT"], 1, lo, la, lo, la, lo, la)
+        idx += 1
+    for m in _wkt_matches(text):
+        s = geom.stats(m.group(0))
+        if s is None:
             continue
-        idx = int(idx0)
-        for m in _wkt_matches(text):
-            s = geom.stats(m.group(0))
-            if s is None:
-                continue
-            kind, rank, np_, cx, cy, x0, y0, x1, y1 = s
-            if not (-180.0 <= cx <= 180.0 and -90.0 <= cy <= 90.0):
-                continue
-            rows.append((url, idx, "wkt", m.group(0), kind, rank, np_,
-                         cx, cy, x0, y0, x1, y1, *extra))
-            idx += 1
-    return pd.DataFrame(rows, columns=[
-        "url", "entity_idx", "source", "geom_wkt", "geom_kind", "kind_rank",
-        "npoints", "lon", "lat", "xmin", "ymin", "xmax", "ymax", *carry])
-
-
-_ENTITY_PA_FIELDS = (
-    ("url", "string"), ("entity_idx", "int32"), ("source", "string"),
-    ("geom_wkt", "string"), ("geom_kind", "string"),
-    ("kind_rank", "int32"), ("npoints", "int32"),
-    ("lon", "float64"), ("lat", "float64"), ("xmin", "float64"),
-    ("ymin", "float64"), ("xmax", "float64"), ("ymax", "float64"))
+        kind, rank, np_, cx, cy, x0, y0, x1, y1 = s
+        if not (-180.0 <= cx <= 180.0 and -90.0 <= cy <= 90.0):
+            continue
+        yield (url, idx, "wkt", m.group(0), kind, rank, np_,
+               cx, cy, x0, y0, x1, y1)
+        idx += 1
 
 
 def _extract_arrow(batches, carry: tuple[str, ...] = (),
                    dedup_local: bool = False):
-    """mapInArrow twin of ``_extract_batch``: same scans, same rows,
-    but the batch boundary is pyarrow-native — no pandas DataFrame
-    construction on either side of the worker (pd.DataFrame from a
-    list of tuples + Spark's pandas->arrow conversion were ~25% of
-    per-batch cost; typed ``pa.array`` from the column lists replaces
-    both). Carry columns are gathered by row index with ``take``, so
-    their arrow types pass through untouched (timestamps included)."""
+    """The mapInArrow kernel: ``_page_entities`` per page, with a
+    pyarrow-native batch boundary — typed ``pa.array`` from column
+    lists, no pandas DataFrame on either side of the worker. Carry
+    columns are gathered by row index with ``take``, so their arrow
+    types pass through untouched (timestamps included).
+
+    ``dedup_local`` keeps only each page's precedence winner, the row
+    with the smallest (kind_rank, entity_idx): all of a url's entities
+    come from this one page row, so the winner is decidable here — no
+    window, no shuffle (see geocode_pages)."""
     import pyarrow as pa
 
-    types = [getattr(pa, t)() for _, t in _ENTITY_PA_FIELDS]
-    names = [n for n, _ in _ENTITY_PA_FIELDS]
+    pa_types = {"string": pa.string(), "int": pa.int32(), "double": pa.float64()}
+    fields = [f.split() for f in ENTITY_SCHEMA.split(", ")]
+    names = [n for n, _ in fields]
+    types = [pa_types[t] for _, t in fields]
     ncols = len(names)
     for batch in batches:
         urls = batch.column("url").to_pylist()
@@ -214,64 +169,15 @@ def _extract_arrow(batches, carry: tuple[str, ...] = (),
         for row_i, (url, text) in enumerate(zip(urls, texts)):
             if text is None:
                 continue
+            rows = _page_entities(url, text)
             if dedup_local:
-                # precedence winner picked inline: idx strictly
-                # increases, so a later entity wins only on strictly
-                # smaller kind_rank — equivalent to the pandas
-                # kernel's min((kind_rank, entity_idx)) over the page
-                best = None
-                idx = 0
-                for m in _latlong_matches(text):
-                    la, lo = float(m.group(1)), float(m.group(2))
-                    if not (-90.0 <= la <= 90.0 and -180.0 <= lo <= 180.0):
-                        continue
-                    if best is None:
-                        wkt = f"POINT ({geom._fmt(lo)} {geom._fmt(la)})"
-                        best = (url, idx, "wgs84", wkt, "POINT",
-                                geom.KIND_RANK["POINT"], 1,
-                                lo, la, lo, la, lo, la)
-                    idx += 1
-                for m in _wkt_matches(text):
-                    s = geom.stats(m.group(0))
-                    if s is None:
-                        continue
-                    kind, rank, np_, cx, cy, x0, y0, x1, y1 = s
-                    if not (-180.0 <= cx <= 180.0 and -90.0 <= cy <= 90.0):
-                        continue
-                    if best is None or rank < best[5]:
-                        best = (url, idx, "wkt", m.group(0), kind, rank,
-                                np_, cx, cy, x0, y0, x1, y1)
-                    idx += 1
-                if best is not None:
-                    for i in range(ncols):
-                        cols[i].append(best[i])
-                    src_idx.append(row_i)
-            else:
-                idx = 0
-                for m in _latlong_matches(text):
-                    la, lo = float(m.group(1)), float(m.group(2))
-                    if not (-90.0 <= la <= 90.0 and -180.0 <= lo <= 180.0):
-                        continue
-                    wkt = f"POINT ({geom._fmt(lo)} {geom._fmt(la)})"
-                    row = (url, idx, "wgs84", wkt, "POINT",
-                           geom.KIND_RANK["POINT"], 1, lo, la, lo, la, lo, la)
-                    for i in range(ncols):
-                        cols[i].append(row[i])
-                    src_idx.append(row_i)
-                    idx += 1
-                for m in _wkt_matches(text):
-                    s = geom.stats(m.group(0))
-                    if s is None:
-                        continue
-                    kind, rank, np_, cx, cy, x0, y0, x1, y1 = s
-                    if not (-180.0 <= cx <= 180.0 and -90.0 <= cy <= 90.0):
-                        continue
-                    row = (url, idx, "wkt", m.group(0), kind, rank, np_,
-                           cx, cy, x0, y0, x1, y1)
-                    for i in range(ncols):
-                        cols[i].append(row[i])
-                    src_idx.append(row_i)
-                    idx += 1
+                # row = (url, entity_idx, source, wkt, kind, kind_rank, ..)
+                best = min(rows, key=lambda r: (r[5], r[1]), default=None)
+                rows = () if best is None else (best,)
+            for row in rows:
+                for i in range(ncols):
+                    cols[i].append(row[i])
+                src_idx.append(row_i)
         arrays = [pa.array(c, t) for c, t in zip(cols, types)]
         out_names = list(names)
         if carry:
@@ -282,155 +188,30 @@ def _extract_arrow(batches, carry: tuple[str, ...] = (),
         yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
 
-def _fmt_col(v):
-    """Column twin of geom._fmt for coordinate doubles: integral values
-    print as integers, the rest as shortest decimal. Exact vs the
-    Python repr for non-integral inputs with <= 10 fractional digits
-    and magnitude >= 1e-4 (repr switches to e-notation below that);
-    pages possibly violating the bound are routed to the arrow kernel
-    by ``_hard_page_cond``, so the hybrid ENGINE has no bound."""
-    dec = F.regexp_replace(F.format_string("%.10f", v), "0+$", "")
-    dec = F.regexp_replace(dec, "\\.$", "")  # 42.0000000000 -> "42."
-    return F.when(v == F.floor(v), v.cast("long").cast("string")).otherwise(dec)
-
-
-def _hard_page_cond():
-    """Cheap textual detector for pages the JVM formatter might not
-    print repr-identically, CONSERVATIVE by design (over-detection just
-    routes a page to the always-correct Arrow kernel): any 11+ digit
-    fractional run, or the '0.0000' prefix every sub-1e-4 decimal
-    coordinate carries (repr e-notation territory). One literal
-    `contains` + one simple rlike — never a pairs re-evaluation."""
-    t = F.col("text")
-    return t.contains("0.0000") | t.rlike(r"\.[0-9]{11}")
-
-
-# Java regex twin of LATLONG_RE ((?i) embedded flag; ASCII \w/\d/\s over
-# the ASCII page corpus — documented unicode-class divergence vs Python)
-_LATLONG_JVM = (r"(?i)\blat\w*[\s:=]+(-?\d{1,2}(?:\.\d+)?)"
-                r"[\s,;]+long\w*[\s:=]+(-?\d{1,3}(?:\.\d+)?)")
-
-def _wkt_keyword_cond():
-    return (F.col("text").isNotNull() &
-            (F.col("text").contains("POINT")
-             | F.col("text").contains("POLYGON")
-             | F.col("text").contains("LINESTRING")))
-
-
-def _latlong_pairs_col():
-    """array<struct<la,lo>> of BOUNDS-KEPT WGS84 matches, in match
-    order — filtering inside the array keeps posexplode's pos equal to
-    the kernel's entity_idx (which increments only for kept matches).
-
-    ONE full-text regex scan (group 0), then the two coordinate groups
-    are re-extracted from each ~30-char match string — matching the
-    Python kernel's single-finditer cost; ``regexp_extract_all`` per
-    group would scan the whole page once per group."""
-    ms = F.regexp_extract_all(F.col("text"), F.lit(_LATLONG_JVM), 0)
-    z = F.transform(ms, lambda m: F.struct(
-        F.regexp_extract(m, _LATLONG_JVM, 1).alias("la"),
-        F.regexp_extract(m, _LATLONG_JVM, 2).alias("lo")))
-    return F.filter(z, lambda p: (
-        (p["la"].cast("double") >= -90.0) & (p["la"].cast("double") <= 90.0)
-        & (p["lo"].cast("double") >= -180.0) & (p["lo"].cast("double") <= 180.0)))
-
-
 def extract_entities(pages: DataFrame, resolutions=cells.RESOLUTIONS,
                      carry: tuple[str, ...] = (),
-                     engine: str = "arrow",
                      dedup_local: bool = False) -> DataFrame:
     """pages(url, text, ...) -> one row per extracted geo-entity with
     precomputed geometry stats and multi-resolution cell ids. ``carry``
     names extra page columns replicated onto each entity row (e.g.
     ``warc_ts`` for the streaming path) — the schema extends itself
-    from the input types.
+    from the input types. ``dedup_local`` keeps one precedence winner
+    per page row inside the kernel (``geocode_pages(dedup_mode=
+    "local")``).
 
-    ``engine``:
-
-    - ``"arrow"`` (default): the single-pass ``mapInArrow`` kernel —
-      find-candidate C scans (``_latlong_matches``/``_wkt_matches``)
-      plus pyarrow-native batch construction on both sides of the
-      worker pipe; no pandas anywhere. Measured 3x the r4 pandas
-      kernel per batch (323 -> 108 ms per 2500 2.5 KB pages).
-    - ``"pandas"``: the same scans through the original
-      ``mapInPandas`` kernel — kept as the parity witness and for
-      callers that want pandas batch semantics.
-    - ``"hybrid"``: WGS84 lat/long pairs extracted entirely JVM-side
-      (``regexp_extract_all`` + array filter + posexplode) with only
-      WKT-keyword pages entering the Arrow kernel (entity_idx offset by
-      the page's lat/long count; repr-formatting edge pages routed to
-      the full kernel). Row-identical to "arrow" (parity-tested) but
-      MEASURED SLOWER and kept as a documented negative result: the
-      hypothesis was that moving the dominant regex JVM-side would fix
-      the local-mode python-worker oversubscription knee
-      (BENCH/BASELINE.md), but Catalyst's per-entity expression tree
-      (posexplode + per-match group extraction + decimal formatting)
-      costs ~2x the whole vectorized kernel (324 vs 165 core-seconds
-      on 1.5M pages at local[8]) — java.util.regex plus per-row
-      codegen expressions lose to one Arrow batch pipe + C sre here.
+    One ``mapInArrow`` pass (``_extract_arrow``): find-candidate C
+    scans plus pyarrow-native batches on both sides of the worker
+    pipe. Measured 3x the earlier mapInPandas kernel per batch (323 ->
+    108 ms per 2500 2.5 KB pages); a JVM-regex variant measured ~2x
+    slower (BENCH/BASELINE.md).
     """
     schema = ENTITY_SCHEMA
     if carry:
         schema += "".join(f", {f.name} {f.dataType.simpleString()}"
                           for f in pages.select(*carry).schema.fields)
 
-    if engine == "arrow":
-        def run_pa(batches):
-            yield from _extract_arrow(batches, carry, dedup_local)
-
-        ents = pages.select("url", "text", *carry).mapInArrow(run_pa, schema)
-    elif engine == "pandas":
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _extract_batch(pdf, carry, dedup_local)
-
-        ents = pages.select("url", "text", *carry).mapInPandas(run, schema)
-    elif engine == "hybrid":
-        allp = pages.select("url", "text", *carry)
-        # pages that might contain a coordinate the JVM formatter can't
-        # print repr-identically (<1e-4 or >10 fractional digits —
-        # vanishingly rare in web text) take the full Arrow kernel;
-        # everything else takes the JVM fast path. The detector is a
-        # cheap textual over-approximation, so no pairs re-evaluation.
-        hard_cond = _hard_page_cond()
-        hard = allp.filter(F.col("text").isNotNull() & hard_cond)
-
-        def run_full(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _extract_batch(pdf, carry)
-
-        hard_ents = hard.mapInPandas(run_full, schema)
-
-        base = allp.filter(F.col("text").isNotNull() & ~hard_cond)
-        pairs = base.select("url", *carry,
-                            F.posexplode(_latlong_pairs_col())
-                            .alias("entity_idx", "_p"))
-        lon = F.col("_p")["lo"].cast("double")
-        lat = F.col("_p")["la"].cast("double")
-        latlong = pairs.select(
-            "url", F.col("entity_idx").cast("int").alias("entity_idx"),
-            F.lit("wgs84").alias("source"),
-            F.concat(F.lit("POINT ("), _fmt_col(lon), F.lit(" "),
-                     _fmt_col(lat), F.lit(")")).alias("geom_wkt"),
-            F.lit("POINT").alias("geom_kind"),
-            F.lit(geom.KIND_RANK["POINT"]).cast("int").alias("kind_rank"),
-            F.lit(1).cast("int").alias("npoints"),
-            lon.alias("lon"), lat.alias("lat"),
-            lon.alias("xmin"), lat.alias("ymin"),
-            lon.alias("xmax"), lat.alias("ymax"), *carry)
-
-        wkt_pages = (base.filter(_wkt_keyword_cond())
-                     .withColumn("_idx0", F.size(_latlong_pairs_col())))
-
-        def run_wkt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _extract_wkt_batch(pdf, carry)
-
-        wkt = (wkt_pages.select("url", "text", "_idx0", *carry)
-               .mapInPandas(run_wkt, schema))
-        ents = latlong.unionByName(wkt).unionByName(hard_ents)
-    else:
-        raise ValueError(f"unknown extraction engine {engine!r}")
+    ents = pages.select("url", "text", *carry).mapInArrow(
+        lambda batches: _extract_arrow(batches, carry, dedup_local), schema)
     for r in resolutions:
         ents = ents.withColumn(f"cell_r{r}", cells.cell_col(F.col("lon"), F.col("lat"), r))
     return ents
@@ -466,6 +247,9 @@ def geocode_pages(pages: DataFrame, resolutions=cells.RESOLUTIONS,
       page row (the corpus contract after latest-capture compaction;
       every synth/stream corpus here). Row-identical to "window"
       under that precondition (parity-tested)."""
+    if dedup_mode not in ("window", "local"):
+        raise ValueError(f"dedup_mode must be 'window' or 'local', "
+                         f"got {dedup_mode!r}")
     if dedup and dedup_mode == "local":
         return extract_entities(pages, resolutions, dedup_local=True)
     ents = extract_entities(pages, resolutions)

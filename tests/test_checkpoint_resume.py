@@ -41,6 +41,31 @@ def test_lineage_rows_and_metrics(spark, tmp_path):
     assert lin["metrics"]["n"] == 1000 and lin["metrics"]["max_id"] == 999
 
 
+def test_metrics_rewrite_crash_keeps_lineage_readable(spark, tmp_path,
+                                                      monkeypatch):
+    """run_stage rewrites an already-published snapshot's lineage to
+    add metrics; a crash mid-dump must leave the previous lineage file
+    whole (resume reads it), not truncated JSON."""
+    store = CheckpointStore(str(tmp_path))
+    real_dump = json.dump
+
+    def torn_dump(obj, f, *args, **kwargs):
+        if obj.get("metrics"):  # only the post-publish metrics rewrite
+            f.write(json.dumps(obj)[:10])
+            raise OSError("simulated crash mid-dump")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        store.run_stage(spark, "s", lambda: spark.range(0, 40),
+                        observe={"n": F.count(F.lit(1))})
+    monkeypatch.undo()
+    lin = store.lineage("s")
+    assert lin["n_rows"] == 40 and lin["metrics"] == {}
+    assert sorted(os.listdir(os.path.join(str(tmp_path), "s"))) == [
+        "LATEST", "snap_0", "snap_0.lineage.json"]
+
+
 def test_run_stage_resumes_without_recompute(spark, tmp_path):
     store = CheckpointStore(str(tmp_path))
     calls = []

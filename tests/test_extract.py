@@ -1,6 +1,11 @@
 """Geocoding extraction: both serializations, precedence dedup,
 byte-identical-text invariant, deterministic synth."""
 
+import random
+import re
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from fagi_spark import extract, synth
@@ -12,7 +17,15 @@ def test_extract_both_serializations(spark):
          ("u2", "shape POINT (12.5 41.9) here and also lat 1.5 long 2.5"),
          ("u3", "area POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)) registered"),
          ("u4", "no geo content at all"),
-         ("u5", "bad lat 999.0 long 10.0 out of range")],
+         ("u5", "bad lat 999.0 long 10.0 out of range"),
+         # out-of-bounds matches interleaved with kept ones; entity_idx
+         # counts kept rows only; repr formatting incl. e-notation
+         ("u6", "lat 95.5 long 10.0 junk lat 5 long 7 more lat -2.25 "
+                "long 181 then lat 0.0000000001 long -0.1234567891"),
+         ("u7", None),
+         ("u8", ""),
+         # lat/long entities come before WKT ones, whatever the position
+         ("u9", "MULTIPOINT ((1 2), (3 4)) before lat 1.5 long 2.5")],
         "url string, text string")
     ents = extract.extract_entities(pages, resolutions=(7,)).collect()
     by_url = {}
@@ -22,7 +35,13 @@ def test_extract_both_serializations(spark):
     assert by_url["u1"][0].lon == -71.0571 and by_url["u1"][0].lat == 42.3601
     assert {r.source for r in by_url["u2"]} == {"wgs84", "wkt"}
     assert by_url["u3"][0].geom_kind == "POLYGON" and by_url["u3"][0].npoints == 5
-    assert "u4" not in by_url and "u5" not in by_url
+    assert not {"u4", "u5", "u7", "u8"} & set(by_url)
+    assert {(r.entity_idx, r.geom_wkt) for r in by_url["u6"]} == {
+        (0, "POINT (7 5)"), (1, "POINT (-0.1234567891 1e-10)")}
+    assert sorted((r.entity_idx, r.source, r.geom_kind, r.geom_wkt)
+                  for r in by_url["u9"]) == [
+        (0, "wgs84", "POINT", "POINT (2.5 1.5)"),
+        (1, "wkt", "MULTIPOINT", "MULTIPOINT ((1 2), (3 4))")]
 
 
 def test_precedence_dedup_most_complex_wins(spark):
@@ -79,35 +98,6 @@ def test_synth_pages_partition_independent(spark):
     assert ka == kb
 
 
-def test_engine_parity_hybrid_vs_arrow(spark):
-    """The JVM-latlong + Arrow-WKT hybrid engine is row-identical to
-    the single-pass Arrow kernel on the synth corpus (all WKT kinds,
-    1-3 entities/page, both serializations) and on adversarial edge
-    pages: integral coords, bounds-violating matches interleaved with
-    kept ones (entity_idx must count only kept), null text, 10-digit
-    fractional coordinates (the hybrid formatting bound)."""
-    pages = synth.synth_pages(spark, 3000, partitions=6)
-    edge = spark.createDataFrame(
-        [("u1", "lat 95.5 long 10.0 junk lat 5 long 7 more lat -2.25 long 181 then lat 0.0000000001 long -0.1234567891"),
-         ("u2", None),
-         ("u3", "lat 42 long -71 geometry POINT (3.5 4) and POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)) end"),
-         ("u4", "POINT (1 2) before lat 1.5 long 2.5"),
-         ("u5", "no geo content at all")],
-        "url string, text string")
-    for df in (pages.select("url", "text"), edge):
-        a = extract.extract_entities(df, engine="arrow")
-        h = extract.extract_entities(df, engine="hybrid")
-        assert a.exceptAll(h).count() == 0
-        assert h.exceptAll(a).count() == 0
-        assert a.count() == h.count()
-    # the kept-only idx rule on u1: 95.5 and 181 are out of bounds
-    got = {(r["entity_idx"], r["geom_wkt"])
-           for r in extract.extract_entities(edge, engine="hybrid")
-           .filter(F.col("url") == "u1").collect()}
-    assert got == {(0, "POINT (7 5)"),
-                   (1, "POINT (-0.1234567891 1e-10)")}
-
-
 def test_geocode_local_dedup_matches_window(spark):
     """dedup_mode='local' (winner picked inside the Arrow kernel, zero
     shuffle) is row-identical to the window path on a unique-url corpus
@@ -124,6 +114,18 @@ def test_geocode_local_dedup_matches_window(spark):
     win_plan = extract.geocode_pages(pages)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" in win_plan  # the cost local mode removes
+    # carry columns ride along the in-kernel winner (timestamps pass
+    # through the kernel's take()) exactly as through the window
+    carry = ("warc_ts",)
+    loc_c = extract.extract_entities(pages, carry=carry, dedup_local=True)
+    win_c = extract.dedup_by_precedence(
+        extract.extract_entities(pages, carry=carry))
+    assert loc_c.schema == win_c.schema
+    assert loc_c.count() == win_c.count() == 400
+    assert loc_c.exceptAll(win_c).count() == 0
+    # a misspelt mode fails at the driver instead of silently windowing
+    with pytest.raises(ValueError, match="dedup_mode"):
+        extract.geocode_pages(pages, dedup_mode="locl")
 
 
 def test_wkt_validity_classes(spark):
@@ -187,33 +189,6 @@ def test_ring_simple_check_degenerate_one_vertex(spark):
     assert got["sq"] == (3, 0, True)
 
 
-def test_engine_parity_arrow_vs_pandas(spark):
-    """The mapInArrow kernel (r5 default) is row-identical to the
-    mapInPandas parity witness — with and without in-kernel precedence
-    dedup, and with a carry column (timestamps pass through take())."""
-    pages = synth.synth_pages(spark, 2000, partitions=4)
-    edge = spark.createDataFrame(
-        [("u1", "lat 95.5 long 10.0 junk lat 5 long 7 more lat -2.25 "
-                "long 181 then lat 0.0000000001 long -0.1234567891"),
-         ("u2", None),
-         ("u3", "lat 42 long -71 geometry POINT (3.5 4) and "
-                "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)) end"),
-         ("u4", "MULTIPOINT ((1 2), (3 4)) before lat 1.5 long 2.5"),
-         ("u5", "no geo content at all"),
-         ("u6", "")],
-        "url string, text string")
-    for df, carry in ((pages, ("warc_ts",)), (pages.select("url", "text"), ()),
-                      (edge, ())):
-        for dd in (False, True):
-            a = extract.extract_entities(df, carry=carry, engine="arrow",
-                                         dedup_local=dd)
-            p = extract.extract_entities(df, carry=carry, engine="pandas",
-                                         dedup_local=dd)
-            assert a.schema == p.schema
-            assert a.exceptAll(p).count() == 0
-            assert p.exceptAll(a).count() == 0
-
-
 def test_fast_scans_match_finditer():
     """_latlong_matches/_wkt_matches are exact finditer twins on
     adversarial strings: MULTI- prefixes, keywords inside matched
@@ -242,3 +217,67 @@ def test_fast_scans_match_finditer():
         aw = [(m.start(), m.end(), m.group(0)) for m in ex.WKT_RE.finditer(t)]
         bw = [(m.start(), m.end(), m.group(0)) for m in ex._wkt_matches(t)]
         assert aw == bw, (t, aw, bw)
+
+
+# WKT_RE's paren body before its quantifiers were made possessive: the
+# reference for the linear-time pattern (same language, same matches)
+_OLD_WKT_RE = re.compile(
+    r"\b(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON)"
+    r"\s*(\((?:[^()]*|\((?:[^()]*|\([^()]*\))*\))*\))")
+
+
+def _fuzz_wkt(rng):
+    """1-2 keyword + balanced-paren snippets of depth 1-4 (4 is past
+    WKT_RE's limit), then 0-2 random truncations / stray parens /
+    deletions."""
+    def group(depth):
+        if depth == 1:
+            return f"({rng.randint(-9, 9)} {rng.randint(0, 9)})"
+        return "(" + ", ".join(group(depth - 1)
+                               for _ in range(rng.randint(1, 3))) + ")"
+
+    s = "".join(rng.choice(["", " ", "a"])
+                + rng.choice(["POINT", "LINESTRING", "POLYGON", "MULTI",
+                              "MULTIPOINT", "MULTILINESTRING",
+                              "MULTIPOLYGON"])
+                + rng.choice(["", " "]) + group(rng.randint(1, 4))
+                for _ in range(rng.randint(1, 2)))
+    for _ in range(rng.randint(0, 2)):
+        i = rng.randrange(len(s) + 1)
+        op = rng.randrange(3)
+        s = (s[:i] if op == 0 else s[:i] + rng.choice("()") + s[i:]
+             if op == 1 else s[:i] + s[i + 1:])
+    return s
+
+
+def test_wkt_re_possessive_matches_old_pattern():
+    """The possessive paren body matches exactly what the old greedy
+    one did: same finditer spans and groups (and _wkt_matches agrees)
+    on a seeded fuzz of keywords, nested parens and coordinates, both
+    balanced and broken. The old pattern's cost is the product of the
+    ways to split every non-paren run inside an unclosed body, so the
+    fuzz keeps the runs short: sum(len(run) - 1) <= 16 per case."""
+    rng = random.Random(20241)
+    n = n_matches = 0
+    while n < 20000:
+        s = _fuzz_wkt(rng)
+        if sum(max(len(r) - 1, 0) for r in re.split(r"[()]", s)) > 16:
+            continue
+        n += 1
+        old = [(m.span(), m.groups()) for m in _OLD_WKT_RE.finditer(s)]
+        new = [(m.span(), m.groups()) for m in extract.WKT_RE.finditer(s)]
+        fast = [(m.span(), m.groups()) for m in extract._wkt_matches(s)]
+        assert old == new == fast, (s, old, new, fast)
+        n_matches += len(old)
+    assert n_matches > 2000  # the fuzz really exercises matches
+
+
+def test_wkt_scan_unclosed_input_is_fast():
+    """Unclosed WKT fails in linear time: the old nested-quantifier
+    body backtracked exponentially (516 ms at 22 filler characters, x4
+    per two more), so neither page below would finish with it."""
+    for text in ("POINT (" + "a" * 60,
+                 "POLYGON ((1 1, 2 2" + " 3" * 10**5):
+        t0 = time.perf_counter()
+        assert extract._wkt_matches(text) == []
+        assert time.perf_counter() - t0 < 2.0

@@ -175,8 +175,11 @@ def main():
     # the detail-section headers only
     import re as _re
 
+    def count_nodes(text, node):
+        return len(_re.findall(rf"^\(\d+\) {node}\b", text, _re.M))
+
     def one_refine(name, text):
-        n_mip = len(_re.findall(r"^\(\d+\) MapInPandas", text, _re.M))
+        n_mip = count_nodes(text, "MapInPandas")
         if n_mip != 1:
             raise SystemExit(f"{name}: expected exactly one MapInPandas "
                              f"exact-refine stage, got {n_mip}")
@@ -217,6 +220,38 @@ def main():
         "row_number()=1 compiles to WindowGroupLimit with a Partial pass "
         "before the exchange — only per-partition winners shuffle, not "
         "every extracted entity.")
+
+    # 4b. geocode: ONE mapInArrow extraction kernel in both dedup
+    # modes; the in-kernel precedence winner ("local") never shuffles.
+    # Nodes are counted above the input's own plan (synth_pages is
+    # itself a MapInPandas generator).
+    pages_text = plan_text(pages)
+    for mode in ("window", "local"):
+        gc_plan = extract.geocode_pages(pages, dedup_mode=mode)
+        gc_text = plan_text(gc_plan)
+        n_arrow = (count_nodes(gc_text, "MapInArrow")
+                   - count_nodes(pages_text, "MapInArrow"))
+        n_pandas = (count_nodes(gc_text, "MapInPandas")
+                    - count_nodes(pages_text, "MapInPandas"))
+        if n_arrow != 1 or n_pandas != 0:
+            raise SystemExit(
+                f"geocode_pages({mode!r}) structural check failed: "
+                f"{n_arrow} MapInArrow / {n_pandas} MapInPandas nodes, "
+                "expected exactly one mapInArrow kernel")
+        n_ex = count_nodes(gc_text, r"\w*Exchange")
+        if mode == "local" and n_ex:
+            raise SystemExit(
+                f"geocode_pages('local') structural check failed: "
+                f"{n_ex} Exchange nodes, expected none")
+        add(f"geocode_pages dedup_mode={mode!r} (S5, one kernel)", gc_plan,
+            ["window_group_limit"] if mode == "window" else [],
+            "exactly one MapInArrow extraction node and no MapInPandas "
+            "above the input's own plan (enforced structurally). "
+            + ("The precedence window follows the kernel: WindowGroupLimit "
+               "partial pass, then one exchange on url."
+               if mode == "window" else
+               "The precedence winner is picked per page inside the "
+               "kernel, so the plan has no Exchange at all (enforced)."))
 
     # 5. exact dedup: partial aggregation
     docs = spark.read.parquet(f"{SF}/documents.parquet")
